@@ -104,15 +104,15 @@ object GraftFunctions {
       NGramsGenerator(exprs(0), exprs(1), exprs(2))
     })
 
-  /** Register on an already-built session (idempotent). */
+  /** Register on an already-built session. A function the session already
+   * has (from an earlier call or from `GraftExtensions`) is left alone, so
+   * repeated calls neither replace it nor log the replacement. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams", exprs => ngramsDescriptor._3(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vdot", exprs => VectorDot.descriptor._3(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_extract_text", exprs => TextExprs.extractDescriptor._3(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokenize", exprs => TextExprs.tokenizeDescriptor._3(exprs), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    Seq(ngramsDescriptor, VectorDot.descriptor,
+      TextExprs.extractDescriptor, TextExprs.tokenizeDescriptor).foreach { case (id, _, builder) =>
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
+    }
   }
 }

@@ -1,13 +1,15 @@
 package graft.artifact
 
 import java.nio.file.{Files, Paths}
-import graft.SparkSuite
+import graft.{DemoBundle, SparkSuite}
 import graft.tag.Matcher
 
 /**
  * Artifact bundle disk loader (SURVEY.md S5/S6 read path): phrases.daac
  * decode pinned against the COMMITTED reference bundle, full-bundle load +
- * tag from reference-built artifacts, and write→load round-trip.
+ * tag from reference-built artifacts, and write→load round-trip. The
+ * "(written demo bundle)" twins run the same checks on `DemoBundle.dir`, the
+ * demo model built and written by this engine, so they need no fixture.
  */
 class DaacSpec extends SparkSuite {
 
@@ -95,6 +97,53 @@ class DaacSpec extends SparkSuite {
     val m = Files.readString(Paths.get(s"$refDir/manifest.json"))
     Files.writeString(Paths.get(s"$dir/manifest.json"),
       m.replace("4294967294", "0"))
+    val e3 = intercept[IllegalArgumentException](TagModel.load(dir))
+    assert(e3.getMessage.toLowerCase.contains("separator"))
+  }
+
+  test("TagModel.load (written demo bundle): online matching works end-to-end") {
+    val model = TagModel.load(DemoBundle.dir)
+    assert(model.manifest.version == "demo-v1")
+    assert(model.payloads.length == 7)
+    val ms = Matcher.matchTextTokens(model, Seq("the", "rat", "cdk10", "oligo", "was"))
+    assert(ms.map(m => (m.start, m.end)) == Seq((1, 4))) // leftmost_longest trigram
+    val all = Matcher.matchTextTokens(model,
+      Seq("protein", "assay", "buffer"), policy = "leftmost_first")
+    assert(all.map(m => (m.start, m.end)) == Seq((0, 2))) // shortest-at-start wins
+  }
+
+  test("write → load round-trip preserves the model (written demo bundle)") {
+    val model = DemoBundle.model
+    val back = TagModel.load(DemoBundle.dir)
+    assert(back.vocab == model.vocab)
+    assert(back.manifest == model.manifest)
+    assert(back.payloads.toSeq == model.payloads.toSeq)
+    assert(back.trie.patterns.map(_.toSeq).toSeq == model.trie.patterns.map(_.toSeq).toSeq)
+    // behavioral parity
+    val toks = Seq("the", "master", "mix", "contains", "rat", "cdk10", "oligo")
+    assert(Matcher.matchTextTokens(back, toks) == Matcher.matchTextTokens(model, toks))
+    // writing the loaded model again reproduces the automaton byte for byte
+    val again = Files.createTempDirectory("graft-artifacts").toString
+    Builder.writeArtifacts(back, again)
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(s"$again/phrases.daac")),
+      Files.readAllBytes(Paths.get(s"${DemoBundle.dir}/phrases.daac"))))
+  }
+
+  test("load invariants fail loudly (written demo bundle): missing file, payload count, separator") {
+    val src = DemoBundle.dir
+    val dir = Files.createTempDirectory("graft-bad-artifacts").toString
+    def cp(n: String) = Files.copy(Paths.get(s"$src/$n"), Paths.get(s"$dir/$n"))
+    cp("vocab.json"); cp("manifest.json"); cp("phrases.daac")
+    val e1 = intercept[IllegalArgumentException](TagModel.load(dir))
+    assert(e1.getMessage.contains("payloads.bin"))
+    Files.write(Paths.get(s"$dir/payloads.bin"),
+      PayloadIO.write(PayloadIO.read(
+        Files.readAllBytes(Paths.get(s"$src/payloads.bin"))).take(3).toIndexedSeq))
+    val e2 = intercept[IllegalArgumentException](TagModel.load(dir))
+    assert(e2.getMessage.contains("Payload count mismatch"))
+    val m = Files.readString(Paths.get(s"$src/manifest.json"))
+    assert(m.contains("4294967294"))
+    Files.writeString(Paths.get(s"$dir/manifest.json"), m.replace("4294967294", "0"))
     val e3 = intercept[IllegalArgumentException](TagModel.load(dir))
     assert(e3.getMessage.toLowerCase.contains("separator"))
   }

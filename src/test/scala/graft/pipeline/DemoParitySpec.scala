@@ -2,10 +2,9 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.SparkSuite
+import graft.{DemoBundle, SparkSuite}
 import graft.artifact.{Builder, PayloadIO, Vocab}
 import graft.mine.Miner
-import graft.model.Doc
 import graft.score.Scorer
 import graft.tag.Tagger
 
@@ -24,21 +23,9 @@ import graft.tag.Tagger
 class DemoParitySpec extends SparkSuite {
   import spark.implicits._
 
-  private val corpus = Seq(
-    Doc("doc_1", Seq("the", "rat", "cdk10", "oligo", "was", "used", "in", "the", "experiment")),
-    Doc("doc_2", Seq("add", "protein", "assay", "buffer", "to", "the", "sample")),
-    Doc("doc_3", Seq("prepare", "lysis", "buffer", "according", "to", "protocol")),
-    Doc("doc_4", Seq("western", "blot", "analysis", "was", "performed")),
-    Doc("doc_5", Seq("the", "master", "mix", "contains", "rat", "cdk10", "oligo")),
-    Doc("doc_6", Seq("protein", "assay", "buffer", "preparation", "is", "critical")),
-    Doc("doc_7", Seq("rat", "cdk10", "protein", "expression", "levels")),
-    Doc("doc_8", Seq("for", "the", "western", "blot", "procedure")),
-    Doc("doc_9", Seq("master", "mix", "preparation", "guidelines")),
-    Doc("doc_10", Seq("in", "the", "lysis", "buffer", "add", "reagent")))
+  private val corpus = DemoBundle.corpus
 
-  private val background = Seq(
-    ("for the", 50000L), ("in the", 30000L), ("to the", 25000L),
-    ("lysis buffer", 8L), ("western blot", 5L)).toDF("ngram", "count")
+  private val background = DemoBundle.background.toDF("ngram", "count")
 
   private lazy val mined =
     Miner.mine(corpus.toDF(), "tokens", Miner.MineConfig(2, 5, minCount = 2))

@@ -71,4 +71,18 @@ class TextExprsSpec extends SparkSuite {
     assert(!plan.contains("regexp"), plan)
     assert(plan.contains("graft_tokenize") && plan.contains("graft_extract_text"), plan)
   }
+
+  test("GraftFunctions.register keeps a function the session already has") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    val own: Seq[Expression] => Expression = TextExprs.tokenizeDescriptor._3(_)
+    registry.createOrReplaceTempFunction("graft_tokenize", own, "scala_udf")
+    GraftFunctions.register(session)
+    GraftFunctions.register(session)
+    assert(registry.lookupFunctionBuilder(FunctionIdentifier("graft_tokenize")).contains(own))
+    assert(Seq("ngrams", "graft_vdot", "graft_extract_text")
+      .forall(n => registry.functionExists(FunctionIdentifier(n))))
+  }
 }

@@ -1,9 +1,10 @@
 package graft.tag
 
-import graft.SparkSuite
+import graft.{DemoBundle, SparkSuite}
 
 /** MatcherService = the reference's NativeMatcher surface (lib.rs:26-104):
- * load / hot-reload / stats / healthcheck parity. */
+ * load / hot-reload / stats / healthcheck parity. The "(written demo bundle)"
+ * twins load `DemoBundle.dir` instead of the reference's committed bundle. */
 class MatcherServiceSpec extends SparkSuite {
 
   private val refDir = "/root/reference/examples/demo_output/artifacts"
@@ -108,6 +109,33 @@ class MatcherServiceSpec extends SparkSuite {
     svc.load(refDir)
     val v1 = svc.stats.version
     val m = graft.artifact.TagModel.load(refDir)
+    svc.reload(m.copy(manifest = m.manifest.copy(version = "demo-v2")))
+    assert(v1 == "demo-v1" && svc.stats.version == "demo-v2")
+    assert(svc.matchTextTokens(Seq("master", "mix")).nonEmpty)
+  }
+
+  test("stats and healthcheck after load (written demo bundle)") {
+    val before = System.currentTimeMillis()
+    val svc = new MatcherService
+    svc.load(DemoBundle.dir)
+    assert(svc.healthcheck())
+    val st = svc.stats
+    assert(st.version == "demo-v1")
+    assert(st.numPatterns == 7)
+    assert(st.loadedAtMs >= before && st.loadedAtMs <= System.currentTimeMillis())
+    assert(st.heapMb > 0.0 && st.heapMb < 1.0)
+    assert((st.p50Us, st.p95Us, st.p99Us) == ((0L, 0L, 0L)))
+    assert(st.hitsTotal == 0L)
+    val ms = svc.matchTextTokens(Seq("rat", "cdk10", "oligo"))
+    assert(ms.nonEmpty)
+    assert(svc.stats.hitsTotal == ms.length.toLong)
+  }
+
+  test("hot reload swaps the model atomically (written demo bundle)") {
+    val svc = new MatcherService
+    svc.load(DemoBundle.dir)
+    val v1 = svc.stats.version
+    val m = graft.artifact.TagModel.load(DemoBundle.dir)
     svc.reload(m.copy(manifest = m.manifest.copy(version = "demo-v2")))
     assert(v1 == "demo-v1" && svc.stats.version == "demo-v2")
     assert(svc.matchTextTokens(Seq("master", "mix")).nonEmpty)
