@@ -22,7 +22,7 @@ final case class Vocab(tokens: Map[String, Int], separatorId: Long) extends Seri
   /** Encode one surface token: lowercase, then lookup, <UNK>=0 for misses
    * (phrasekit_tag.rs:74-84, lib/phrasekit.rb:43-51). */
   @inline def encode(token: String): Int =
-    tokens.getOrElse(token.toLowerCase(java.util.Locale.ROOT), unkId)
+    tokens.getOrElse(graft.mine.Grams.lower(token), unkId)
   def encodeAll(ts: Seq[String]): Array[Int] = {
     val out = new Array[Int](ts.length)
     var i = 0

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.matching.AhoCorasick
+import graft.mine.Grams
 import graft.model.Payload
 
 /**
@@ -89,7 +90,7 @@ object Builder {
       else col("domain_count") // accepted alias (phrasekit_build.rs:22)
 
     val base = phrases.select(
-      transform(col("tokens"), t => lower(t)).as("tokens"),
+      transform(col("tokens"), t => Grams.lower(t)).as("tokens"),
       col("phrase_id").cast("int").as("phrase_id"),
       col("salience").cast("float").as("salience"),
       countCol.cast("long").as("count"))

@@ -59,15 +59,17 @@ object Extract {
   /** Column expression: text STRING → ARRAY<STRING> of lowercase whitespace tokens,
    * empties dropped (the reference's "whitespace" tokenizer + the lowercase
    * normalization it applies at every stage, SURVEY.md P1). Single-pass
-   * native expression (plans.TokenizeExpr): one toLowerCase, one
-   * whitespace scan, zero-copy token slices. */
+   * native expression (plans.TokenizeExpr): one lowercase (`Grams.lower`,
+   * the gram key's case mapping), one whitespace scan, zero-copy token
+   * slices. */
   def tokenize(text: Column): Column = {
     ensureFunctions()
     call_function("graft_tokenize", text)
   }
 
   /** The original lower+regex-split+filter formulation — kept as the
-   * equivalence oracle for TokenizeExpr. */
+   * equivalence oracle for TokenizeExpr (equal wherever Catalyst `lower()`
+   * and `Grams.lower` agree; see TokenizeExpr). */
   def tokenizeColumns(text: Column): Column =
     filter(split(lower(text), "\\s+"), t => t =!= lit(""))
 }

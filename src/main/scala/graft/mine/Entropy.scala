@@ -52,70 +52,6 @@ object Entropy {
     (log(s) - sum(count.cast("double") * log(count.cast("double"))) / s)
   }
 
-  /** 64-bit hash of a space-joined gram string, identical to the window
-   * hashes the corpus walk computes over its (lowercased) tokens — candidate
-   * strings are hashed VERBATIM (no lowercasing), preserving the former
-   * string-equality join semantics where a non-lowercase candidate never
-   * matches the lowercased gram stream. */
-  private def gramHash(g: String): Long = {
-    import Miner.Hash64
-    val toks = g.split(' ')
-    var p = 0x5851f42d4c957f2dL
-    var i = 0
-    while (i < toks.length) { p = Hash64.combine(p, Hash64.str(toks(i))); i += 1 }
-    Hash64.window(p, toks.length)
-  }
-
-  /** Per-partition combiner for the candidate-adjacent extension mine: open
-   * addressing keyed on the gram's 64-bit window hash, with the count, the
-   * p/s adjacency flags and the gram STRING materialized once per partition
-   * per distinct gram (the Miner pass-2 pattern: every later instance costs
-   * long arithmetic + one probe, no string building). count == 0 ⇔ empty. */
-  private final class ExtCombiner(initialCapacity: Int) {
-    private var cap = Integer.highestOneBit(math.max(initialCapacity, 16) * 2 - 1)
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var counts = new Array[Long](cap)
-    private var flags = new Array[Byte](cap)
-    private var strs = new Array[String](cap)
-    private var n = 0
-    def add(k: Long, p: Boolean, s: Boolean)(mk: => String): Unit = {
-      var i = (Miner.Hash64.mix(k) & mask).toInt
-      while (counts(i) != 0 && keys(i) != k) i = (i + 1) & mask
-      if (counts(i) == 0) {
-        keys(i) = k
-        strs(i) = mk
-        flags(i) = ((if (p) 1 else 0) | (if (s) 2 else 0)).toByte
-        n += 1
-        if (n.toLong * 10 > cap.toLong * 7) { counts(i) = 1; grow(); return }
-      }
-      counts(i) += 1
-    }
-    private def grow(): Unit = {
-      // same loud capacity limit as Miner.LongCountMap (round-5 advice):
-      // a further doubling past 2^30 would overflow Int array sizing
-      if (cap >= (1 << 30)) throw new IllegalStateException(
-        s"ExtCombiner: one partition holds > $n distinct candidate-adjacent grams " +
-          "(combiner capacity 2^30 slots) — repartition the corpus finer")
-      val (ok, oc, of, os) = (keys, counts, flags, strs)
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); counts = new Array[Long](cap)
-      flags = new Array[Byte](cap); strs = new Array[String](cap)
-      var i = 0
-      while (i < ok.length) {
-        if (oc(i) != 0) {
-          var j = (Miner.Hash64.mix(ok(i)) & mask).toInt
-          while (counts(j) != 0) j = (j + 1) & mask
-          keys(j) = ok(i); counts(j) = oc(i); flags(j) = of(i); strs(j) = os(i)
-        }
-        i += 1
-      }
-    }
-    def iterator: Iterator[(String, Long, Int, Int)] = (0 until cap).iterator
-      .filter(i => counts(i) != 0)
-      .map(i => (strs(i), counts(i), flags(i) & 1, (flags(i) >> 1) & 1))
-  }
-
   /**
    * Candidate-bounded extension counts: (ngram = the full (n+1)-gram,
    * count, p, s) where p=1 iff the gram's length-n PREFIX is a candidate
@@ -126,20 +62,19 @@ object Entropy {
    * Broadcast path (candidates ≤ cfg.broadcastCandidateLimit): HASH-FIRST
    * (round-6, mirroring the Miner's two-pass kernel — the round-5 verdict
    * measured the interpreted higher-order-function gram walk 3-5× slower
-   * than the hashed mapPartitions mine, and this pass was the engine's last
-   * HOF gram walk): candidate strings are hashed executor-side into a sorted
-   * long array (one collect, which doubles as the size gate) and ONE
-   * mapPartitions corpus scan hashes every token once, derives all
-   * (minN+1..maxN+1)-gram window hashes from shared per-start prefix chains,
-   * checks prefix/suffix candidacy by binary search, and combines
-   * candidate-adjacent grams in an unboxed per-partition map that
-   * materializes each surviving gram's string once per partition. The only
-   * exchange in the plan is the final (candidate-bounded) string-keyed
-   * aggregate — no per-gram lambda interpretation, no corpus-scale string
-   * explode, no joins. A 64-bit prefix/suffix hash collision could mark a
-   * non-adjacent gram as adjacent (probability ~|candidates|·|distinct
-   * grams|/2⁶⁴ — negligible, the Miner's documented trade); counts are exact
-   * because the output aggregate keys on the gram STRING.
+   * than the hashed mapPartitions mine): candidate strings are hashed
+   * executor-side into a sorted long array (one collect, which doubles as
+   * the size gate) and ONE mapPartitions corpus scan runs the `Grams` walk
+   * over lengths [minN, maxN+1], keeps each (minN+1..maxN+1)-gram whose
+   * prefix or suffix window hash is a candidate (binary search), and
+   * counts the kept grams in the `Grams` combiner, which builds each gram's
+   * string once per partition. The only exchange in the plan is the final
+   * (candidate-bounded) string-keyed aggregate — no per-gram lambda
+   * interpretation, no corpus-scale string explode, no joins. A 64-bit
+   * prefix/suffix hash collision could mark a non-adjacent gram as adjacent
+   * (probability ~|candidates|·|distinct grams|/2⁶⁴ — negligible, the
+   * Miner's documented trade); counts are exact because the output
+   * aggregate keys on the gram STRING.
    * The result should be materialized ONCE by consumers reading both sides
    * (filterCandidates localCheckpoints it); the function itself returns the
    * raw lazy plan so its shape stays assertable (EntropySpec).
@@ -166,87 +101,40 @@ object Entropy {
     // collect IS the broadcast-size gate (limit + 1 rows, like Miner's
     // survivor guard): 8 bytes per candidate, 40 MB at the 5M default limit.
     val guard = math.min(cfg.broadcastCandidateLimit, Int.MaxValue - 2L).toInt
-    val candHashes = candKeys.as[String].map(gramHash)
+    val candHashes = candKeys.as[String].map(Grams.gramHash)
       .limit(guard + 1).collect()
     if (candHashes.length <= guard) {
       java.util.Arrays.sort(candHashes)
       val bc = spark.sparkContext.broadcast(candHashes)
-      val W = maxN - minN + 2 // window-hash lengths stored: minN .. maxN+1
       docs.select(col(tokensCol)).as[Seq[String]]
         .mapPartitions { it =>
           val cand = bc.value
-          val comb = new ExtCombiner(1 << 12)
-          var lower = new Array[String](256)
-          var th = new Array[Long](256)
-          var wh = new Array[Long](256 * W)
+          def isCand(h: Long) = java.util.Arrays.binarySearch(cand, h) >= 0
+          val w = new Grams.Windows(minN, maxN + 1)
+          val comb = new Grams.LongCountMap(1 << 12, keepGrams = true)
           it.foreach { toks =>
-            val L = toks.length
-            if (L >= minN + 1) {
-              if (lower.length < L) {
-                lower = new Array[String](L); th = new Array[Long](L)
-                wh = new Array[Long](L * W)
-              }
-              var i = 0
-              toks.foreach { t =>
-                lower(i) = t.toLowerCase(java.util.Locale.ROOT)
-                th(i) = Miner.Hash64.str(lower(i))
-                i += 1
-              }
-              // pass A: all window hashes for lengths [minN, maxN+1], one
-              // shared prefix-combine chain per start (the Miner's trick)
-              var s = 0
-              while (s + minN <= L) {
-                var p = 0x5851f42d4c957f2dL
-                val jEnd = math.min(s + maxN + 1, L)
-                var j = s
-                while (j < jEnd) {
-                  p = Miner.Hash64.combine(p, th(j))
-                  j += 1
-                  val len = j - s
-                  if (len >= minN) wh(s * W + (len - minN)) = Miner.Hash64.window(p, len)
-                }
-                s += 1
-              }
-              // pass B: each (minN+1..maxN+1)-gram is candidate-adjacent iff
-              // its length-(len-1) prefix [s, len-1] or suffix [s+1, len-1]
-              // hash is in the sorted candidate array
-              s = 0
-              while (s + minN + 1 <= L) {
-                val lEnd = math.min(maxN + 1, L - s)
-                var len = minN + 1
-                while (len <= lEnd) {
-                  val pf = java.util.Arrays.binarySearch(cand,
-                    wh(s * W + (len - 1 - minN))) >= 0
-                  val sf = java.util.Arrays.binarySearch(cand,
-                    wh((s + 1) * W + (len - 1 - minN))) >= 0
-                  if (pf || sf) {
-                    val e = s + len
-                    comb.add(wh(s * W + (len - minN)), pf, sf) {
-                      val sb = new java.lang.StringBuilder
-                      var q = s
-                      while (q < e) {
-                        if (q > s) sb.append(' ')
-                        sb.append(lower(q)); q += 1
-                      }
-                      sb.toString
-                    }
-                  }
-                  len += 1
-                }
-                s += 1
-              }
+            w.load(toks)
+            while (w.next()) {
+              if (w.len > minN && (isCand(w.hashAt(w.start, w.len - 1)) ||
+                  isCand(w.hashAt(w.start + 1, w.len - 1)))) comb.add(w.hash, w)
             }
           }
-          comb.iterator
+          // each kept gram's p/s flags, re-derived once per partition from
+          // its string: prefix = all but the last token, suffix = all but the first
+          comb.gramIterator.map { case (_, g, c) =>
+            (g, c, if (isCand(Grams.gramHash(g.substring(0, g.lastIndexOf(' '))))) 1 else 0,
+              if (isCand(Grams.gramHash(g.substring(g.indexOf(' ') + 1)))) 1 else 0)
+          }
         }
         .toDF("ngram", "partial", "p0", "s0")
         .groupBy("ngram")
         .agg(sum(col("partial")).as("count"),
           max(col("p0")).as("p"), max(col("s0")).as("s"))
     } else {
+      graft.plans.GraftFunctions.register(spark)
       val grams = docs
-        .select(explode(Miner.ngramsCol(col(tokensCol), minN + 1, maxN + 1)).as("g"))
-        .select(col("g"), split(col("g"), " ").as("tk"))
+        .select(call_function("ngrams", col(tokensCol), lit(minN + 1), lit(maxN + 1)))
+        .select(col("ngram").as("g"), split(col("ngram"), " ").as("tk"))
         .select(col("g"),
           array_join(slice(col("tk"), lit(1), size(col("tk")) - 1), " ").as("prefix"),
           array_join(slice(col("tk"), lit(2), size(col("tk")) - 1), " ").as("suffix"))
@@ -278,21 +166,26 @@ object Entropy {
       rightExt: DataFrame, leftExt: DataFrame): DataFrame = {
     val totalTokens = unigrams.agg(coalesce(sum("count"), lit(0L))).head().getLong(0)
 
-    // PMI: explode candidate tokens, join unigram counts, aggregate Σ ln c(wi)
+    // PMI: explode candidate tokens, join unigram counts, aggregate Σ ln c(wi).
+    // Every token of a candidate must join exactly one unigram row: a missing
+    // or duplicated unigram would silently skew the PMI, so it fails the query.
     val cand = candidates.select(col("ngram"), col("count").cast("long").as("count"),
       split(col("ngram"), " ").as("toks"))
     val pmi = cand
       .select(col("ngram"), col("count"), size(col("toks")).as("n"),
         explode(col("toks")).as("tok"))
-      .join(unigrams.select(col("ngram").as("tok"), col("count").as("uc")), Seq("tok"))
+      .join(unigrams.select(col("ngram").as("tok"), col("count").as("uc")), Seq("tok"), "left")
       .groupBy("ngram", "count", "n")
       .agg(sum(log(col("uc").cast("double"))).as("sum_ln_uc"),
-        count(lit(1)).as("joined"))
+        count(col("uc")).as("joined"))
       // log2(c(g) T^(n-1) / Π c(wi)) = (ln c(g) + (n-1) ln T − Σ ln c(wi)) / ln 2
-      .withColumn("pmi",
+      .withColumn("pmi", when(col("joined") === col("n"),
         (log(col("count").cast("double")) +
           (col("n") - 1).cast("double") * math.log(totalTokens.toDouble) -
           col("sum_ln_uc")) / math.log(2.0))
+        .otherwise(raise_error(concat(lit("Entropy.score: candidate '"), col("ngram"),
+          lit("' has "), col("n").cast("string"), lit(" tokens but joined "),
+          col("joined").cast("string"), lit(" unigram rows")))))
       .select("ngram", "pmi")
 
     // branching entropies from the (n+1)-gram extension tables
@@ -312,7 +205,6 @@ object Entropy {
       .join(left, Seq("ngram"), "left")
       .join(right, Seq("ngram"), "left")
       .na.fill(0.0, Seq("left_entropy", "right_entropy"))
-      .na.fill(Double.NegativeInfinity, Seq("pmi"))
   }
 
   /** Legacy single-extension-table signature: both sides read `extensions`. */
@@ -334,11 +226,11 @@ object Entropy {
     // to TWO corpus scans where a single native explode + vocab-scale string
     // aggregate does the same exact counts in ONE (guide §1.2: the cheapest
     // plan is workload-dependent; measured −0.4 s on en_entropy warm).
-    // lower() = UTF8String.toLowerCase, the same case mapping the tokenizer
-    // applies, so counts are identical to the mine's (which lowercases too).
+    // Grams.lower is the mine's case mapping, so every candidate token finds
+    // its unigram.
     val unigrams = docs
       .select(explode(col(tokensCol)).as("tok"))
-      .select(lower(col("tok")).as("ngram"))
+      .select(Grams.lower(col("tok")).as("ngram"))
       .groupBy("ngram").agg(count(lit(1)).as("count"))
       .localCheckpoint()
     // One corpus scan for both entropy sides. localCheckpoint over persist()

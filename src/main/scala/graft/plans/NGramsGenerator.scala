@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * function (SURVEY.md G1, §4.3: "Generator for SQL ergonomics") — gives SQL
  * users `LATERAL VIEW ngrams(tokens, 2, 5) g AS ngram` / `SELECT
  * explode_outer`-style access to the miner's n-gram semantics: every
- * contiguous window of length n ∈ [min_n, max_n], lowercased, one row per
- * OCCURRENCE (phrasekit_mine.rs:144-158).
+ * contiguous window of length n ∈ [min_n, max_n], one row per OCCURRENCE
+ * (phrasekit_mine.rs:144-158), lowercased with the gram key's case mapping
+ * (`Grams.lower`), so its strings are the Miner's.
  *
  * Works directly on UTF8String token arrays (no Scala object conversion).
  * CodegenFallback: generators are invoked per input row, not per element, so
@@ -57,7 +58,7 @@ case class NGramsGenerator(tokens: Expression, minN: Expression, maxN: Expressio
     var i = 0
     while (i < L) {
       val t = arr.getUTF8String(i)
-      lowered(i) = if (t == null) UTF8String.EMPTY_UTF8 else t.toLowerCase
+      lowered(i) = if (t == null) UTF8String.EMPTY_UTF8 else graft.mine.Grams.lower(t)
       i += 1
     }
     val out = Vector.newBuilder[InternalRow]
@@ -90,6 +91,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(VectorDot.descriptor)
     ext.injectFunction(TextExprs.extractDescriptor)
     ext.injectFunction(TextExprs.tokenizeDescriptor)
+    ext.injectFunction(TextExprs.lowerDescriptor)
   }
 }
 
@@ -110,7 +112,8 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     Seq(ngramsDescriptor, VectorDot.descriptor,
-      TextExprs.extractDescriptor, TextExprs.tokenizeDescriptor).foreach { case (id, _, builder) =>
+      TextExprs.extractDescriptor, TextExprs.tokenizeDescriptor,
+      TextExprs.lowerDescriptor).foreach { case (id, _, builder) =>
       if (!registry.functionExists(id))
         registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -103,13 +103,18 @@ case class ExtractTextExpr(child: Expression) extends UnaryExpression with Codeg
 }
 
 /**
- * `graft_tokenize(text STRING) → ARRAY<STRING>` — byte-exact equivalent of
+ * `graft_tokenize(text STRING) → ARRAY<STRING>` — the single-pass form of
  *   filter(split(lower(text), "\\s+"), t => t =!= "")
- * Lowercases ONCE (UTF8String.toLowerCase — ASCII fast path, full Unicode
- * fallback), then splits on Java-regex `\s` = [ \t\n\x0B\f\r] (ASCII-only,
- * exactly the set the regex split matched) in one scan; tokens are
- * ZERO-COPY slices of the lowered buffer (UTF8String substrings), so the
- * only allocation per document is the lowered string and the token array.
+ * with one difference: the case mapping is the gram key's (`Grams.lower`,
+ * the JDK's `Locale.ROOT` mapping), not Catalyst `lower()`, which uses ICU.
+ * The two agree on ASCII and on most of Unicode but not everywhere (U+2C2F
+ * `Ⱟ`: ICU lowercases it to U+2C5F, the JDK leaves it), so the result is
+ * byte-exact with the column formulation only where they agree.
+ * Lowercases ONCE (ASCII fast path, full Unicode fallback), then splits on
+ * Java-regex `\s` = [ \t\n\x0B\f\r] (ASCII-only, exactly the set the regex
+ * split matched) in one scan; tokens are ZERO-COPY slices of the lowered
+ * buffer (UTF8String substrings), so the only allocation per document is
+ * the lowered string and the token array.
  */
 case class TokenizeExpr(child: Expression) extends UnaryExpression with CodegenFallback {
 
@@ -126,7 +131,7 @@ case class TokenizeExpr(child: Expression) extends UnaryExpression with CodegenF
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
   override def nullSafeEval(input: Any): Any = {
-    val lowered = input.asInstanceOf[UTF8String].toLowerCase
+    val lowered = graft.mine.Grams.lower(input.asInstanceOf[UTF8String])
     val bytes = lowered.getBytes // materialized once; token slices are views
     val n = bytes.length
     val out = new scala.collection.mutable.ArrayBuffer[Any](16)
@@ -148,6 +153,23 @@ case class TokenizeExpr(child: Expression) extends UnaryExpression with CodegenF
     copy(child = newChild)
 }
 
+/** `graft_lower(s STRING) → STRING`: `Grams.lower`, the gram key's case
+ * mapping, as a Catalyst expression (the column form `Grams.lower(Column)`). */
+case class LowerExpr(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "graft_lower"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"graft_lower requires STRING, got ${other.sql}")
+  }
+  override protected def nullSafeEval(input: Any): Any =
+    graft.mine.Grams.lower(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.mine.Grams.lower($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object TextExprs {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
 
@@ -157,6 +179,14 @@ object TextExprs {
     (exprs: Seq[Expression]) => {
       require(exprs.length == 1, "graft_extract_text(html) takes 1 argument")
       ExtractTextExpr(exprs.head)
+    })
+
+  val lowerDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("graft_lower"),
+    new ExpressionInfo(classOf[LowerExpr].getName, "graft_lower"),
+    (exprs: Seq[Expression]) => {
+      require(exprs.length == 1, "graft_lower(s) takes 1 argument")
+      LowerExpr(exprs.head)
     })
 
   val tokenizeDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (

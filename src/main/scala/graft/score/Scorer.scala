@@ -2,6 +2,7 @@ package graft.score
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.mine.Grams
 import graft.ops.Ids
 
 /**
@@ -64,13 +65,14 @@ object Scorer {
    */
   def scoreWithStats(domain: DataFrame, background: DataFrame,
       cfg: ScoreConfig = ScoreConfig()): (DataFrame, () => ScoringStats) = {
-    // lowercase-normalize keys like load_phrases (phrasekit_score.rs:159); inputs
-    // from our Miner are already lowercase, but external JSONL inputs may not be.
+    // lowercase-normalize keys like load_phrases (phrasekit_score.rs:159), with
+    // the mine's case mapping (Grams.lower); inputs from our Miner are already
+    // lowercase, but external JSONL inputs may not be.
     // Duplicate keys collapse via max(count) (the reference's HashMap semantics are
     // "last line wins" — order-dependent and unexercised by any fixture; we pick a
     // deterministic merge instead, documented divergence SURVEY.md S2).
     def norm(df: DataFrame): DataFrame = df
-      .select(lower(col("ngram")).as("ngram"), col("count").cast("long").as("count"))
+      .select(Grams.lower(col("ngram")).as("ngram"), col("count").cast("long").as("count"))
       .groupBy("ngram").agg(max("count").as("count"))
 
     // both sides feed two consumers (totals + join) — persist the normalized

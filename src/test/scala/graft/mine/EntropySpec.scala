@@ -115,4 +115,56 @@ class EntropySpec extends SparkSuite {
       .select("ngram", "left_entropy", "right_entropy").as[(String, Double, Double)].collect()
     assert(out.toSeq == Seq(("p q", 0.0, 0.0)))
   }
+
+  test("PMI of a candidate with U+2C2F uses the mine's case mapping for its unigrams") {
+    // Catalyst lower() (ICU) maps U+2C2F to U+2C5F, the JDK mapping keeps it;
+    // a unigram table lowered the other way would miss the token and inflate PMI
+    val q = "\u2C2F"
+    val d = Seq(Seq(q, "x", "y"), Seq(q, "x", "z"), Seq("a", "x")).toDF("t")
+    val c = Seq((s"$q x", 2L)).toDF("ngram", "count")
+    val pmi = Entropy.filterCandidates(d, "t", c, 2, 2,
+        Entropy.EntropyConfig(minPmi = Double.NegativeInfinity, minBranchEntropy = 0.0))
+      .select("ngram", "pmi").as[(String, Double)].collect().toMap
+    // T = 8, c(q) = 2, c(x) = 3: log2(2·8 / (2·3))
+    assert(math.abs(pmi(s"$q x") - math.log(16.0 / 6) / math.log(2.0)) < 1e-9, pmi.toString)
+  }
+
+  test("score fails loudly when a candidate token has no unigram row") {
+    val unigrams = Seq(("a", 4L), ("c", 2L)).toDF("ngram", "count") // no "b"
+    val e = intercept[Exception](Entropy.score(cands, unigrams,
+      Seq.empty[(String, Long)].toDF("ngram", "count")).collect())
+    assert(e.getMessage.contains("unigram rows"), e.getMessage)
+  }
+
+  test("property: boundedExtensions == string-exact prefix/suffix adjacency (both paths)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val alphabet = Seq("a", "A", "b", "c", "\u2C2F", "\uA7C0", "\u1C89")
+    val gen = for {
+      docs <- Gen.listOfN(6, Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.oneOf(alphabet))))
+      minN <- Gen.choose(1, 2)
+      maxN <- Gen.choose(minN, 3)
+      cands <- Gen.someOf(docs.flatMap(d => (minN to maxN).flatMap(n =>
+        d.map(_.toLowerCase(java.util.Locale.ROOT)).sliding(n).filter(_.length == n)
+          .map(_.mkString(" ")))).distinct :+ "A b")
+    } yield (docs, minN, maxN, cands.toSeq)
+    val prop = Prop.forAllNoShrink(gen) { case (docs, minN, maxN, cands) =>
+      val df = docs.toDF("t")
+      val candDf = cands.map((_, 1L)).toDF("ngram", "count")
+      val candSet = cands.toSet
+      val exact = docs.flatMap(d => (minN + 1 to maxN + 1).flatMap(n =>
+          d.map(_.toLowerCase(java.util.Locale.ROOT)).sliding(n).filter(_.length == n)))
+        .map(w => (w.mkString(" "), if (candSet(w.init.mkString(" "))) 1 else 0,
+          if (candSet(w.tail.mkString(" "))) 1 else 0))
+        .filter(g => g._2 == 1 || g._3 == 1)
+        .groupBy(identity).map { case ((g, p, s), occ) => (g, occ.size.toLong, p, s) }.toSet
+      def run(cfg: Entropy.EntropyConfig) =
+        Entropy.boundedExtensions(df, "t", candDf, minN, maxN, cfg)
+          .select("ngram", "count", "p", "s").as[(String, Long, Int, Int)].collect().toSet
+      val fallback = Entropy.EntropyConfig(broadcastCandidateLimit = 0L)
+      run(Entropy.EntropyConfig()) == exact &&
+        run(fallback) == exact.filter(_._2 >= fallback.fallbackExtensionMinCount)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

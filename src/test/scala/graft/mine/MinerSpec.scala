@@ -105,4 +105,31 @@ class MinerSpec extends SparkSuite {
       assert(st.ngramsAfterFilter == rows)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("property: hashed mine counts == plain-Scala string groupBy (broadcast and join paths)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // mixed case plus six code points whose Catalyst lower() (ICU) differs
+    // from the JDK mapping the mine uses
+    val alphabet = Seq("a", "A", "b", "B", "c", "\u2C2F", "\uD801\uDD70", "\u1C89",
+      "\uD803\uDD50", "\uA7C0", "\uA7DC")
+    val gen = for {
+      docs <- Gen.listOfN(8, Gen.choose(0, 10).flatMap(Gen.listOfN(_, Gen.oneOf(alphabet))))
+      minN <- Gen.choose(1, 3)
+      maxN <- Gen.choose(minN, 4)
+      minCount <- Gen.choose(1L, 3L)
+    } yield (docs, minN, maxN, minCount)
+    val prop = Prop.forAllNoShrink(gen) { case (docs, minN, maxN, minCount) =>
+      val exact = docs.flatMap(d => (minN to maxN).flatMap(n =>
+          d.map(_.toLowerCase(java.util.Locale.ROOT)).sliding(n).filter(_.length == n)
+            .map(_.mkString(" "))))
+        .groupBy(identity).map { case (g, occ) => (g, occ.size.toLong) }
+        .filter(_._2 >= minCount).toSet
+      def run(cfg: Miner.MineConfig) = Miner.mine(docs.toDF("tokens"), "tokens", cfg)
+        .select("ngram", "count").as[(String, Long)].collect().toSet
+      val cfg = Miner.MineConfig(minN, maxN, minCount, ordered = false)
+      run(cfg) == exact && run(cfg.copy(broadcastSurvivorLimit = 0)) == exact
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

@@ -122,16 +122,33 @@ class NGramsGeneratorSpec extends SparkSuite {
       .as[(String, String)].collect().toSeq
     assert(got == Seq(
       ("d1", "rat cdk10"), ("d1", "the rat"), ("d1", "the rat cdk10")))
-    // column-function equivalence on a larger corpus
+    // equivalence with a plain-Scala sliding window on a larger corpus
     val docs = graft.corpus.Synth.corpus(spark, 50).toDF()
       .select(graft.corpus.Extract.tokenize(col("text")).as("tokens"))
     docs.createOrReplaceTempView("ng_docs2")
     val viaSql = spark.sql(
       "SELECT ngram FROM ng_docs2 LATERAL VIEW ngrams(tokens, 2, 4) g AS ngram")
       .groupBy("ngram").count().as[(String, Long)].collect().toMap
-    val viaCol = docs.select(explode(graft.mine.Miner.ngramsCol(col("tokens"), 2, 4)).as("ngram"))
-      .groupBy("ngram").count().as[(String, Long)].collect().toMap
-    assert(viaSql == viaCol && viaSql.nonEmpty)
+    val viaScala = docs.as[Seq[String]].collect().toSeq
+      .flatMap(t => (2 to 4).flatMap(n => t.map(_.toLowerCase(java.util.Locale.ROOT))
+        .sliding(n).filter(_.length == n).map(_.mkString(" "))))
+      .groupBy(identity).map { case (g, gs) => g -> gs.size.toLong }
+    assert(viaSql == viaScala && viaSql.nonEmpty)
+  }
+
+  test("SQL ngrams strings equal Miner.mine strings (U+2C2F and mixed case)") {
+    GraftFunctions.register(spark)
+    // U+2C2F: Catalyst lower() (ICU) maps it to U+2C5F, the JDK mapping keeps it
+    val docs = Seq(Seq("\u2C2F", "Rat", "x"), Seq("\u2C2F", "rat", "y"), Seq("RAT", "X"))
+      .toDF("tokens")
+    docs.createOrReplaceTempView("ng_docs3")
+    val viaSql = spark.sql(
+      "SELECT DISTINCT ngram FROM ng_docs3 LATERAL VIEW ngrams(tokens, 1, 3) g AS ngram")
+      .as[String].collect().toSet
+    val mined = graft.mine.Miner.mine(docs, "tokens", graft.mine.Miner.MineConfig(1, 3, 1))
+      .select("ngram").as[String].collect().toSet
+    assert(viaSql == mined)
+    assert(mined.contains("\u2C2F rat") && !mined.exists(_.contains("\u2C5F")), mined.toString)
   }
 
   test("type errors are clean") {

@@ -154,7 +154,8 @@ class DemoParitySpec extends SparkSuite {
   }
 
   test("mining stats + min_count monotonicity (spec/miner_spec.rb:76-99)") {
-    val st = Miner.stats(corpus.toDF(), "tokens", mined, Miner.MineConfig(2, 5, 2))
+    val (_, stats) = Miner.mineWithStats(corpus.toDF(), "tokens", Miner.MineConfig(2, 5, 2))
+    val st = stats()
     assert(st.totalDocs == 10)
     assert(st.totalTokens == corpus.map(_.tokens.length).sum)
     val lower = Miner.mine(corpus.toDF(), "tokens", Miner.MineConfig(2, 5, 1)).count()
